@@ -28,13 +28,17 @@ Differences from the reference, all deliberate (SURVEY.md §7):
 
 from __future__ import annotations
 
-import os
-import shutil
+import logging
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
-from .sinks.staging import read_staging, write_quarantine, write_staging
+from .sinks.staging import (
+    archive_processed,
+    read_staging,
+    write_quarantine,
+    write_staging,
+)
 from .sources.apache_log import read_apache_log
 
 
@@ -47,32 +51,50 @@ def ingest(
 ) -> DataFrame:
     """Batch ingest: ``*.log`` under ``log_dir`` → partitioned staging.
 
-    Returns the corrupt-line audit frame (empty when every line parsed),
-    read back from a quarantine parquet written during ingest — it stays
+    ``DataFrame.observe`` counts rows, unparsed lines, NULL user and size
+    fields and corrupt lines on the staging write itself, and the counts
+    are logged — no validation pass (the reference's ``print(df.count())``
+    pays one, sree-etl-tdk-lambda.py:191). A clean day is one scan of the
+    logs; only a day with corrupt lines scans again to quarantine them,
+    stamped with ``run_date`` (``"unknown"`` when not given).
+
+    Returns this run's corrupt lines (empty on a clean day), read back
+    from the quarantine parquet pruned to the run's stamp — it stays
     valid after the source files are archived away (a frame lazily bound
-    to the moved files would fail on first use). Archiving moves processed
-    files driver-side — the batch equivalent of the streaming source's
-    ``cleanSource=archive`` (K5); at S3 scale this is a manifest-driven
-    batch copy, never per-row work.
+    to the moved files would fail on first use). Archiving is
+    ``archive_processed`` (K5).
     """
     parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    write_staging(parsed.drop("_corrupt"), staging_path)
-    quarantine = write_quarantine(parsed, staging_path, run_date)
-    # Explicit schema: on a fully-clean day the quarantine write leaves
-    # an EMPTY partitioned directory (no files to infer from), and a
-    # schema-inferring read would fail the whole ingest — the worst
-    # possible reward for a corruption-free input.
-    corrupt = spark.read.schema("_corrupt STRING, date STRING").parquet(
-        quarantine
+    obs = Observation("ingest")
+    observed = parsed.observe(
+        obs,
+        F.count(F.lit(1)).alias("n_rows"),
+        F.count(F.when(F.col("request_method").isNull(), 1)).alias(
+            "n_unparsed"
+        ),
+        F.count(F.when(F.col("user_id").isNull(), 1)).alias("n_null_user"),
+        F.count(F.when(F.col("size").isNull(), 1)).alias("n_null_size"),
+        F.count(F.when(F.col("_corrupt").isNotNull(), 1)).alias("n_corrupt"),
+    )
+    # The observe node sits below the drop, so the _corrupt tally still
+    # rides the staging write's scan while the written columns honor
+    # STAGING_SCHEMA.
+    write_staging(observed.drop("_corrupt"), staging_path)
+    metrics = obs.get
+    stamp = run_date if run_date is not None else "unknown"
+    logging.getLogger(__name__).info("ingest %s: %s", stamp, metrics)
+    quarantine = write_quarantine(
+        parsed, staging_path, stamp, metrics["n_corrupt"]
     )
     if archive_dir is not None:
-        os.makedirs(archive_dir, exist_ok=True)
-        for name in sorted(os.listdir(log_dir)):
-            if name.endswith(".log"):
-                shutil.move(
-                    os.path.join(log_dir, name), os.path.join(archive_dir, name)
-                )
-    return corrupt
+        archive_processed(log_dir, archive_dir)
+    # Declared schema: a corruption-free history leaves an empty
+    # directory, which a schema-inferring read would fail on.
+    return (
+        spark.read.schema("_corrupt STRING, date STRING")
+        .parquet(quarantine)
+        .where(F.col("date") == stamp)
+    )
 
 
 def daily_analytics(

@@ -23,8 +23,6 @@ import shutil
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from ..sources.apache_log import read_apache_log
-
 STAGING_TABLE = "log_clean"
 
 #: The cleansed staging schema (SURVEY.md §1.3; matches what
@@ -50,7 +48,6 @@ STAGING_FORMATS = ("parquet", "orc")
 def write_staging(
     df: DataFrame,
     path: str,
-    mode: str = "overwrite",
     fmt: str = "parquet",
 ) -> None:
     """K1/K2: partitioned Snappy columnar staging write (one write, not
@@ -68,7 +65,7 @@ def write_staging(
             f"{STAGING_FORMATS}"
         )
     (
-        df.write.mode(mode)
+        df.write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("date")
         .option("compression", "snappy")
@@ -78,26 +75,32 @@ def write_staging(
 
 
 def write_quarantine(
-    parsed: DataFrame, staging_path: str, run_date: str | None
+    parsed: DataFrame, staging_path: str, date: str, n_corrupt: int
 ) -> str:
     """Quarantine the ``_corrupt`` audit rows next to (not inside) the
     declared staging columns. Every staging writer must drop ``_corrupt``
     before ``write_staging`` — otherwise the parquet grows an undeclared
     13th column that the declared-schema read silently hides and that
     ``compact_staging`` (which rewrites through STAGING_SCHEMA) would
-    permanently discard. The quarantine is date-partitioned with dynamic
-    overwrite so re-running a day replaces that day's corrupt rows; corrupt
-    lines have no parseable event date, so the run date stamps them.
-    Returns the quarantine path."""
+    permanently discard. Corrupt lines have no parseable event date, so
+    the caller's ``date`` stamps them.
+
+    Re-running a date replaces that date's partition: through dynamic
+    overwrite when ``n_corrupt > 0`` (a second scan of ``parsed``), by
+    deleting it without any job on a clean run, so a fixed day stops
+    reporting stale lines. The directory exists afterwards either way,
+    so a declared-schema read of a corruption-free history returns 0
+    rows. Returns the quarantine path."""
     quarantine = os.path.join(staging_path, "_quarantine")
+    if not n_corrupt:
+        shutil.rmtree(
+            os.path.join(quarantine, f"date={date}"), ignore_errors=True
+        )
+        os.makedirs(quarantine, exist_ok=True)
+        return quarantine
     (
         parsed.filter(F.col("_corrupt").isNotNull())
-        .select(
-            "_corrupt",
-            F.lit(run_date if run_date is not None else "unknown").alias(
-                "date"
-            ),
-        )
+        .select("_corrupt", F.lit(date).alias("date"))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
         .partitionBy("date")
@@ -128,65 +131,6 @@ def read_staging(
     if date is not None:
         df = df.where(F.col("date") == date)
     return df
-
-
-def ingest_logs(
-    spark: SparkSession,
-    log_dir: str,
-    staging_path: str,
-    run_date: str | None = None,
-    mode: str = "overwrite",
-) -> DataFrame:
-    """The reference's whole Lambda (sree-etl-tdk-lambda.py:145-218) as one
-    distributed plan: text scan → native CLF parse → partitioned write.
-    ``_corrupt`` audit rows go to the quarantine sidecar, never into the
-    declared staging columns. Returns the parsed frame (lazy, still
-    carrying ``_corrupt``) for further use."""
-    parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    write_staging(parsed.drop("_corrupt"), staging_path, mode=mode)
-    write_quarantine(parsed, staging_path, run_date)
-    return parsed
-
-
-def ingest_logs_observed(
-    spark: SparkSession,
-    log_dir: str,
-    staging_path: str,
-    run_date: str | None = None,
-    mode: str = "overwrite",
-) -> dict[str, int]:
-    """Ingest with free data-quality telemetry: ``df.observe`` attaches
-    accumulator-backed aggregates to the WRITE pass itself, so row count,
-    corrupt-line count, and null-field tallies come out of the one scan
-    the job already does — no second validation scan of a 100 TB input
-    (the reference's equivalent is a blind ``print`` of ``df.count()``
-    that triggers exactly such an extra pass,
-    sree-etl-tdk-lambda.py:191). Returns the observed metrics dict; the
-    staging parquet is written as a side effect of the same action."""
-    from pyspark.sql import Observation
-
-    parsed = read_apache_log(spark, log_dir, run_date=run_date)
-    obs = Observation("ingest")
-    observed = parsed.observe(
-        obs,
-        F.count(F.lit(1)).alias("n_rows"),
-        F.count(F.when(F.col("request_method").isNull(), 1)).alias(
-            "n_unparsed"
-        ),
-        F.count(F.when(F.col("user_id").isNull(), 1)).alias("n_null_user"),
-        F.count(F.when(F.col("size").isNull(), 1)).alias("n_null_size"),
-        F.count(F.when(F.col("_corrupt").isNotNull(), 1)).alias("n_corrupt"),
-    )
-    # The observe node sits below the drop, so metrics (including the
-    # _corrupt tally) still ride the staging write's single scan while the
-    # written columns honor STAGING_SCHEMA.
-    write_staging(observed.drop("_corrupt"), staging_path, mode=mode)
-    metrics = dict(obs.get)
-    # Quarantine pass only when the first scan saw corruption — clean days
-    # (the common case at 100 TB) stay one-scan.
-    if metrics.get("n_corrupt", 0):
-        write_quarantine(parsed, staging_path, run_date)
-    return metrics
 
 
 def register_staging_table(

@@ -1,5 +1,7 @@
 from __future__ import annotations
 
+from pathlib import Path
+
 import pytest
 
 SF_DIR_SMOKE = "/root/testdata/sf0.001"
@@ -34,6 +36,9 @@ def spark():
 # ---------------------------------------------------------------------------
 
 QUICK_MOD = 12
+
+#: the lane this session selected, for the terminal summary
+_LANE = pytest.StashKey[str]()
 
 #: per-query sweep modules sliced 1-in-QUICK_MOD in the quick lane
 _SWEEP_MODULES = {"test_oracle_parity", "test_plan_hazards"}
@@ -85,11 +90,41 @@ def pytest_collection_modifyitems(config, items):
     # No explicit -m and no full-suite opt-in: default to the quick
     # lane so a bare `pytest tests/` finishes inside the verify window
     # instead of being cut off (explicit deselection keeps the report
-    # honest about what was skipped).
-    if config.option.markexpr or os.environ.get("TDK_FULL_TESTS"):
+    # honest about what was skipped). Tests in a file or node ID named
+    # on the command line always run: `pytest tests/test_pipeline.py`
+    # means that file, whichever lane it belongs to.
+    if config.option.markexpr:
+        config.stash[_LANE] = f"-m {config.option.markexpr}"
         return
-    selected = [i for i in items if i.get_closest_marker("quick")]
-    deselected = [i for i in items if not i.get_closest_marker("quick")]
+    if os.environ.get("TDK_FULL_TESTS"):
+        config.stash[_LANE] = "full (TDK_FULL_TESTS)"
+        return
+    named = _named_files(config)
+    selected, deselected = [], []
+    for i in items:
+        keep = i.get_closest_marker("quick") or i.path in named
+        (selected if keep else deselected).append(i)
+    config.stash[_LANE] = (
+        f"quick, {len(deselected)} tests deselected; run with -m full "
+        "for every test"
+    )
     if deselected:
         config.hook.pytest_deselected(items=deselected)
         items[:] = selected
+
+
+def _named_files(config) -> set:
+    """Test files named on the command line, alone or as a node ID's file
+    part; directories are not (they keep the default lane)."""
+    named = set()
+    for arg in config.args:
+        path = Path(config.invocation_params.dir, arg.split("::")[0])
+        if path.is_file():
+            named.add(path.resolve())
+    return named
+
+
+def pytest_terminal_summary(terminalreporter, config):
+    lane = config.stash.get(_LANE, None)
+    if lane is not None:
+        terminalreporter.write_line(f"test lane: {lane}")

@@ -3,6 +3,7 @@ daily analytics pass — the reference's two scheduled jobs back to back."""
 
 from __future__ import annotations
 
+import logging
 import os
 
 import pytest
@@ -106,58 +107,123 @@ def test_quarantine_is_idempotent_per_day(spark, tmp_path):
     assert c2.count() == 1
 
 
-def test_ingest_observed_metrics_single_pass(spark, tmp_path):
-    # df.observe rides the write action: metrics arrive without a second
-    # scan, and they agree with what a separate count would say.
-    logs = tmp_path / "obs_logs"
-    logs.mkdir()
-    (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
-    staging = str(tmp_path / "obs_staging")
+def _write_day(logs, run_date, lines):
+    logs.mkdir(exist_ok=True)
+    for f in logs.iterdir():
+        f.unlink()
+    (logs / f"{run_date}.log").write_text("\n".join(lines) + "\n")
 
-    from tdk_apache_log_etl_spark.sinks.staging import ingest_logs_observed
 
-    metrics = ingest_logs_observed(
-        spark, str(logs), staging, run_date="2026-08-13"
+def _read_quarantine(spark, staging):
+    return spark.read.schema("_corrupt STRING, date STRING").parquet(
+        os.path.join(staging, "_quarantine")
     )
-    assert metrics["n_rows"] == len(LINES)
-    assert metrics["n_unparsed"] == 1   # the malformed line
-    assert metrics["n_null_user"] == 2  # '-' user + malformed line
-    assert metrics["n_null_size"] == 2  # 304-style '-' size + malformed
-    assert metrics["n_corrupt"] == 1    # quarantined, not staged
+
+
+def test_ingest_observed_metrics_single_pass(spark, tmp_path, caplog):
+    # df.observe rides the staging write: the logged metrics agree with
+    # what a separate count would say, a clean day runs ONE job over the
+    # logs, and only a dirty day pays a second (the quarantine write).
+    logs = tmp_path / "obs_logs"
+    staging = str(tmp_path / "obs_staging")
+    sc = spark.sparkContext
+
+    def ingest_jobs(run_date, lines):
+        _write_day(logs, run_date, lines)
+        group = f"ingest-{run_date}"
+        sc.setJobGroup(group, group)
+        try:
+            with caplog.at_level(
+                logging.INFO, logger="tdk_apache_log_etl_spark.pipeline"
+            ):
+                caplog.clear()
+                ingest(spark, str(logs), staging, run_date=run_date)
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        [record] = caplog.records
+        return record.args[1], sc.statusTracker().getJobIdsForGroup(group)
+
+    metrics, jobs = ingest_jobs("2026-08-13", LINES)
+    assert metrics == {
+        "n_rows": len(LINES),
+        "n_unparsed": 1,   # the malformed line
+        "n_null_user": 2,  # '-' user + malformed line
+        "n_null_size": 2,  # 304-style '-' size + malformed
+        "n_corrupt": 1,    # quarantined, not staged
+    }
+    assert len(jobs) == 2
     staged = read_staging(spark, staging, date="2026-08-13")
     assert staged.count() == metrics["n_rows"]
 
+    metrics, jobs = ingest_jobs("2026-08-14", LINES[:-1])
+    assert metrics["n_rows"] == len(LINES) - 1
+    assert metrics["n_corrupt"] == 0
+    assert len(jobs) == 1
+
 
 def test_all_staging_writers_honor_declared_schema(spark, tmp_path):
-    # Every staging writer must drop _corrupt before writing: an inferred
+    # The staging writer must drop _corrupt before writing: an inferred
     # read of the staging parquet (what a foreign engine would do) must
     # show exactly the declared 12 columns, and the corrupt audit row must
-    # land in the quarantine sidecar instead — for BOTH convenience
-    # writers, not just pipeline.ingest (round-2 ADVICE).
-    from tdk_apache_log_etl_spark.sinks.staging import (
-        STAGING_SCHEMA,
-        ingest_logs,
-        ingest_logs_observed,
-    )
+    # land in the quarantine sidecar instead.
+    from tdk_apache_log_etl_spark.sinks.staging import STAGING_SCHEMA
 
     declared = {c.split()[0] for c in STAGING_SCHEMA.split(", ")}
-    for name, runner in [
-        ("w1", lambda lg, st: ingest_logs(spark, lg, st,
-                                          run_date="2026-08-13")),
-        ("w2", lambda lg, st: ingest_logs_observed(spark, lg, st,
-                                                   run_date="2026-08-13")),
-    ]:
-        logs = tmp_path / f"{name}_logs"
-        logs.mkdir()
-        (logs / "2026-08-13.log").write_text("\n".join(LINES) + "\n")
-        staging = str(tmp_path / f"{name}_staging")
-        runner(str(logs), staging)
-        inferred = spark.read.parquet(staging)
-        assert set(inferred.columns) == declared, name
-        quarantined = spark.read.schema("_corrupt STRING, date STRING").parquet(
-            os.path.join(staging, "_quarantine")
-        )
-        assert quarantined.count() == 1, name
+    logs = tmp_path / "w_logs"
+    _write_day(logs, "2026-08-13", LINES)
+    staging = str(tmp_path / "w_staging")
+    ingest(spark, str(logs), staging, run_date="2026-08-13")
+    inferred = spark.read.parquet(staging)
+    assert set(inferred.columns) == declared
+    assert _read_quarantine(spark, staging).count() == 1
+
+
+def test_clean_day_after_dirty_day_reports_zero_corrupt(
+    spark, tmp_path, capsys
+):
+    # the returned frame and the CLI count hold only THIS run's corrupt
+    # lines, never an earlier night's quarantine
+    from tdk_apache_log_etl_spark.__main__ import main
+
+    logs = tmp_path / "dc_logs"
+    staging = str(tmp_path / "dc_staging")
+    _write_day(logs, "2026-08-13", LINES)
+    assert ingest(spark, str(logs), staging, run_date="2026-08-13").count() == 1
+
+    _write_day(logs, "2026-08-14", LINES[:-1])
+    assert ingest(spark, str(logs), staging, run_date="2026-08-14").count() == 0
+    _write_day(logs, "2026-08-15", LINES[:-1])
+    capsys.readouterr()
+    assert main(
+        ["ingest", str(logs), staging, "--run-date", "2026-08-15"]
+    ) == 0
+    assert "corrupt_lines=0" in capsys.readouterr().out
+    # the dirty night's quarantine is kept
+    dates = [r.date for r in _read_quarantine(spark, staging).collect()]
+    assert dates == ["2026-08-13"]
+
+
+def test_clean_rerun_clears_the_days_quarantine(spark, tmp_path):
+    logs = tmp_path / "rr_logs"
+    staging = str(tmp_path / "rr_staging")
+    _write_day(logs, "2026-08-13", LINES)
+    ingest(spark, str(logs), staging, run_date="2026-08-13")
+    assert _read_quarantine(spark, staging).count() == 1
+    # the day's log is fixed and re-ingested: no stale corrupt lines
+    _write_day(logs, "2026-08-13", LINES[:-1])
+    assert ingest(spark, str(logs), staging, run_date="2026-08-13").count() == 0
+    assert _read_quarantine(spark, staging).count() == 0
+
+
+def test_first_clean_ingest_leaves_an_empty_quarantine(spark, tmp_path):
+    logs = tmp_path / "fc_logs"
+    staging = str(tmp_path / "fc_staging")
+    _write_day(logs, "2026-08-13", LINES[:-1])
+    assert ingest(spark, str(logs), staging, run_date="2026-08-13").count() == 0
+    quarantined = _read_quarantine(spark, staging)
+    assert quarantined.count() == 0
+    assert quarantined.columns == ["_corrupt", "date"]
 
 
 def test_cli_analytics_requires_out_or_jdbc(tmp_path):

@@ -426,9 +426,14 @@ def test_salting_splits_hot_key_partitions(spark):
     from tdk_apache_log_etl_spark.operators.skew import salted_join
 
     prev_aqe = spark.conf.get("spark.sql.adaptive.enabled")
+    prev_parts = spark.conf.get("spark.sql.shuffle.partitions")
     spark.conf.set("spark.sql.adaptive.enabled", "false")
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
     try:
+        # pinned: get_spark sizes shuffle partitions from the core count,
+        # and 64 salts over as few as 8 partitions stack too many hot-key
+        # groups per task for the 8x bound below
+        spark.conf.set("spark.sql.shuffle.partitions", "32")
         # 90% of the big side carries ONE key — the stranded-reducer shape
         big = spark.range(100_000).select(
             F.when(F.col("id") % 10 != 0, F.lit(1))
@@ -462,6 +467,7 @@ def test_salting_splits_hot_key_partitions(spark):
         assert m_salted <= m_plain / 8, (m_plain, m_salted)
     finally:
         spark.conf.set("spark.sql.adaptive.enabled", prev_aqe)
+        spark.conf.set("spark.sql.shuffle.partitions", prev_parts)
         spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
 
 
